@@ -9,12 +9,14 @@ Reference pipeline (mysql_to_clickhouse_sync.py main(), :123-222):
 
 Spark-first shape: the "snapshot" is the source catalog (parquet fixtures
 locally; the chunk-partitioned JDBC source in sources/jdbc.py against a real
-MySQL); the extract is a declarative per-table plan whose partitioning IS the
-chunk plan; the sink is parquet locally (ClickHouse JDBC in production —
-swap `write.parquet` for `write.format('jdbc')` options); the checkpoint is
-a JSON manifest recording per-table bounds + row counts — the analog of
-metadata.txt's binlog position, from which the streaming CDC phase
-(streaming/cdc.py) resumes.
+MySQL); the extract is a declarative per-table plan that keeps the chunk
+plan's key-range clustering (each output file covers a disjoint key range)
+while AQE sizes the partition count from the data; the sink is parquet
+locally (ClickHouse JDBC in production — swap `write.parquet` for
+`write.format('jdbc')` options, where batch_size is the rows per INSERT);
+the checkpoint is a JSON manifest recording per-table bounds, row counts,
+files written and seconds — the analog of metadata.txt's binlog position,
+from which the streaming CDC phase (streaming/cdc.py) resumes.
 
 Error policy deliberately diverges from the reference: it logs-and-continues,
 returning [] on failed reads (S:48-50 — silent data loss). Here a failed
@@ -25,7 +27,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import math
 import os
 import time
 
@@ -36,7 +37,6 @@ from mysql_to_clickhouse_sync_spark.catalog import ROWID, TABLES, load_table
 from mysql_to_clickhouse_sync_spark.sources.jdbc import filter_tables
 
 DEFAULT_BATCH_SIZE = 1000  # reference --batch_size default (S:236)
-MAX_OUTPUT_PARTITIONS = 64
 
 
 def table_bounds(df: DataFrame, rowid: str) -> tuple[int, int, int]:
@@ -70,26 +70,52 @@ def discover_tables(sf_dir: str) -> list[str]:
     return names
 
 
+def _write_extract(df: DataFrame, rowid: str | None, path: str, mode: str) -> int:
+    """Write one table's extract to parquet; returns the part files the
+    table now has on disk. The chunk plan (P:119-129) is sized by the data,
+    not by batch_size: a keyset table is range-partitioned on its key with
+    no count, so each file covers a disjoint key range and AQE coalesces
+    spark.sql.shuffle.partitions to what the rows fill. A PK-less table
+    (rowid None) is written in its scan's own partitions."""
+    if rowid is not None:
+        df = df.repartitionByRange(F.col(rowid))
+    df.write.mode(mode).parquet(path)
+    return sum(1 for f in os.listdir(path) if f.startswith("part-"))
+
+
+def _merge_into_lake(
+    spark: SparkSession, path: str, rowid: str, df: DataFrame
+) -> tuple[int, int]:
+    """MERGE an extract into the table's LakeTable; (version, data files).
+    The merge shuffles by key itself, so the extract goes in unpartitioned."""
+    from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
+    from mysql_to_clickhouse_sync_spark.streaming.cdc import as_state
+
+    table = LakeTable(spark, path, keys=[rowid], version_cols=[rowid])
+    table.merge(as_state(df))
+    version = table.current_version()
+    return version, table.manifest(version)["n_files"]
+
+
 def sync_table(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
     name: str,
-    batch_size: int = DEFAULT_BATCH_SIZE,
     lake: bool = False,
 ) -> dict:
     """Extract one table chunk-parallel and load it to the sink, returning
-    its manifest entry (the resume-point metadata).
+    its manifest entry (the resume-point metadata): bounds, rows, the part
+    files written (``chunks``) and the seconds taken.
 
     Tables with an integer rowid get the keyset path: range bounds + key-
     range partitioning (the chunk plan, P:119-129). A table with NO
     auto-increment PK — absent from the ROWID map or missing the column —
     takes the reference's fallback (P:200-211): the (0,0) bounds sentinel
     and offset paging (P:130-142). Spark-first, that is a plain parallel
-    scan hash-spread over ceil(n/batch) output chunks: MySQL's LIMIT
-    paging without ORDER BY carries no row order contract anyway, and the
-    scan needs no key to parallelize. Such tables cannot resume by key —
-    incremental_sync re-extracts them in full (mode == "offset").
+    scan written as it is partitioned; the scan needs no key to
+    parallelize. Such tables cannot resume by key — incremental_sync
+    re-extracts them in full (mode == "offset").
 
     ``lake=True`` lands keyset tables through the sinks/merge.py
     LakeTable instead of a plain parquet overwrite: the snapshot is
@@ -100,6 +126,7 @@ def sync_table(
     recovery lacks. The key-chunk output layout is traded for the
     merge's key-hash shuffle; offset-mode (PK-less) tables keep the
     plain overwrite (no key, no merge)."""
+    t0 = time.perf_counter()
     rowid = ROWID.get(name)
     df = _load_any(spark, sf_dir, name)
     out_path = os.path.join(out_dir, name)
@@ -110,17 +137,6 @@ def sync_table(
         rowid = None
         mn, mx, n = 0, 0, df.count()  # the reference's (0,0) sentinel
         mode = "offset"
-
-    # Chunk plan -> physical partitioning: ceil(n/batch) ranges on the key,
-    # capped so a 100 TB table yields a sane task count (each partition then
-    # covers a wider stride — same plan, coarser granularity).
-    n_chunks = max(1, min(MAX_OUTPUT_PARTITIONS, math.ceil(max(n, 1) / batch_size)))
-    if n == 0:
-        extracted = df
-    elif mode == "keyset":
-        extracted = df.repartitionByRange(n_chunks, F.col(rowid))
-    else:
-        extracted = df.repartition(n_chunks)
     entry = {
         "table": name,
         "rowid": rowid,
@@ -128,20 +144,15 @@ def sync_table(
         "min_id": mn,
         "max_id": mx,
         "rows": n,
-        "chunks": n_chunks,
         "path": out_path,
     }
     if lake and mode == "keyset":
-        from mysql_to_clickhouse_sync_spark.sinks.merge import LakeTable
-        from mysql_to_clickhouse_sync_spark.streaming.cdc import as_state
-
-        table = LakeTable(
-            spark, out_path, keys=[rowid], version_cols=[rowid]
+        entry["lake_version"], entry["chunks"] = _merge_into_lake(
+            spark, out_path, rowid, df
         )
-        table.merge(as_state(extracted))
-        entry["lake_version"] = table.current_version()
     else:
-        extracted.write.mode("overwrite").parquet(out_path)
+        entry["chunks"] = _write_extract(df, rowid, out_path, "overwrite")
+    entry["seconds"] = round(time.perf_counter() - t0, 3)
     return entry
 
 
@@ -179,14 +190,15 @@ def snapshot_sync(
     discovered = discover_tables(sf_dir) or list(TABLES)
     names = filter_tables(discovered, include, exclude)
     entries = [
-        sync_table(spark, sf_dir, out_dir, name, batch_size, lake=lake)
-        for name in names
+        sync_table(spark, sf_dir, out_dir, name, lake=lake) for name in names
     ]
     manifest = {
         # The reference stores the binlog position captured under the
         # snapshot lock (S:175-181), BEFORE the copy starts.
         "source": sf_dir,
         "completed_unix": int(time.time()),
+        # Rows per INSERT (S:109-112): the production ClickHouse sink's
+        # JDBC batchsize (sinks/clickhouse.py); it does not size the extract.
         "batch_size": batch_size,
         "tables": entries,
     }
@@ -198,18 +210,14 @@ def snapshot_sync(
     return manifest
 
 
-def incremental_sync(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-) -> dict:
+def incremental_sync(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     """Resume from the manifest: extract only rows whose key is beyond each
     table's recorded max_id (the append-only half of CDC — the reference's
     binlog replay covers updates/deletes; see streaming/cdc.py for those).
 
     Reads out_dir/manifest.json, appends the delta per table, and rewrites
-    the manifest with advanced bounds. Tables without new rows are skipped
+    the manifest with advanced bounds, the table's part files on disk
+    (``chunks``) and this pass's seconds. Tables without new rows are skipped
     entirely (the predicate prunes at the scan, so a no-op sync reads only
     footers + the bounds aggregate).
     """
@@ -223,41 +231,23 @@ def incremental_sync(
         if entry.get("mode", "keyset") == "offset" or rowid is None:
             # PK-less table: no key to resume by (the reference's offset-
             # paged tables have the same property) — full re-extract.
-            new_entries.append(
-                sync_table(spark, sf_dir, out_dir, name, batch_size)
-            )
+            new_entries.append(sync_table(spark, sf_dir, out_dir, name))
             continue
+        t0 = time.perf_counter()
         df = _load_any(spark, sf_dir, name)
         delta = df.filter(F.col(rowid) > last_max)
         mn, mx, n = table_bounds(delta, rowid)
         if n > 0:
-            n_chunks = max(
-                1, min(MAX_OUTPUT_PARTITIONS, math.ceil(n / batch_size))
-            )
-            chunked = delta.repartitionByRange(n_chunks, F.col(rowid))
+            path = entry["path"]
             if "lake_version" in entry:
-                from mysql_to_clickhouse_sync_spark.sinks.merge import (
-                    LakeTable,
+                entry["lake_version"], entry["chunks"] = _merge_into_lake(
+                    spark, path, rowid, delta
                 )
-                from mysql_to_clickhouse_sync_spark.streaming.cdc import (
-                    as_state,
-                )
-
-                table = LakeTable(
-                    spark, entry["path"], keys=[rowid], version_cols=[rowid]
-                )
-                table.merge(as_state(chunked))
-                entry = {**entry, "lake_version": table.current_version()}
             else:
-                chunked.write.mode("append").parquet(entry["path"])
-            entry = {
-                **entry,
-                "max_id": mx,
-                "rows": entry["rows"] + n,
-                "last_delta_rows": n,
-            }
-        else:
-            entry = {**entry, "last_delta_rows": 0}
+                entry["chunks"] = _write_extract(delta, rowid, path, "append")
+            entry.update(max_id=mx, rows=entry["rows"] + n)
+        entry["last_delta_rows"] = n
+        entry["seconds"] = round(time.perf_counter() - t0, 3)
         new_entries.append(entry)
 
     manifest = {
@@ -278,7 +268,13 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--include", default=None, help="table-name include regex")
     ap.add_argument("--exclude", default=None, help="table-name exclude regex")
-    ap.add_argument("--batch-size", type=int, default=DEFAULT_BATCH_SIZE)
+    ap.add_argument(
+        "--batch-size",
+        type=int,
+        default=DEFAULT_BATCH_SIZE,
+        help="rows per INSERT (the JDBC sink's batchsize), recorded in the"
+        " manifest; output files follow the data (AQE)",
+    )
     ap.add_argument(
         "--lake",
         action="store_true",

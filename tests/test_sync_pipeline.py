@@ -4,6 +4,11 @@ the JDBC source's plan-shape helpers."""
 from __future__ import annotations
 
 import json
+import os
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
 
 from mysql_to_clickhouse_sync_spark.sources.jdbc import (
     filter_tables,
@@ -158,3 +163,84 @@ def test_lake_mode_sync_is_versioned_and_time_travels(spark, tmp_path):
     # current version holds both halves; version 0 is the pure snapshot
     assert table.read().count() == 2 * n0
     assert table.read(version=0).count() == n0
+
+
+# More rows than 64 batches of 1000. The 64-hex-char payload makes the
+# keyset extract shuffle ~6 MB, enough for AQE to keep several range
+# partitions on a multi-core session.
+BIG_ROWS = 70_000
+
+
+@pytest.fixture(scope="module")
+def big_sync(spark, tmp_path_factory):
+    """One snapshot of a >64k-row keyset table (catalog name `orders`,
+    gappy shuffled keys) and a PK-less table of the same size."""
+    root = tmp_path_factory.mktemp("big_sync")
+    src, out = str(root / "src"), str(root / "out")
+    ids = spark.range(BIG_ROWS).select(
+        "id", F.sha2(F.col("id").cast("string"), 256).alias("payload")
+    )
+    ids.select((F.col("id") * 7 + 3).alias("o_orderkey"), "payload").orderBy(
+        F.rand(1)
+    ).repartition(3).write.parquet(f"{src}/orders.parquet")
+    ids.withColumnRenamed("id", "seq").repartition(3).write.parquet(
+        f"{src}/audit_log.parquet"
+    )
+    manifest = snapshot_sync(spark, src, out)
+    return {t["table"]: t for t in manifest["tables"]}
+
+
+def _part_files(path):
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.startswith("part-")
+    )
+
+
+def test_keyset_files_cover_disjoint_key_ranges(big_sync):
+    entry = big_sync["orders"]
+    spans, rows = [], 0
+    for f in _part_files(entry["path"]):
+        md = pq.read_metadata(f)
+        col = md.schema.to_arrow_schema().get_field_index("o_orderkey")
+        stats = [
+            md.row_group(g).column(col).statistics
+            for g in range(md.num_row_groups)
+        ]
+        if md.num_rows:
+            spans.append((min(s.min for s in stats), max(s.max for s in stats)))
+        rows += md.num_rows
+    assert rows == entry["rows"] == BIG_ROWS
+    assert len(spans) > 1  # one file would make disjointness vacuous
+    spans.sort()
+    assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:]))
+    assert (spans[0][0], spans[-1][1]) == (entry["min_id"], entry["max_id"])
+
+
+def test_offset_extract_writes_without_exchange(spark, big_sync):
+    """A PK-less table is written in its scan's partitions: the executed
+    write plan carries no shuffle."""
+    path = big_sync["audit_log"]["path"]
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription() for i in range(execs.size())
+    ]
+    writes = [
+        p
+        for p in plans
+        if "InsertIntoHadoopFsRelationCommand" in p and f"file:{path}," in p
+    ]
+    assert writes, "the audit_log write was not recorded"
+    assert "Exchange" not in writes[-1]
+
+
+def test_big_table_writes_at_most_shuffle_partitions_files(spark, big_sync):
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert big_sync["orders"]["rows"] > 64_000
+    assert 1 <= len(_part_files(big_sync["orders"]["path"])) <= cap
+
+
+def test_manifest_chunks_are_part_files_on_disk(big_sync):
+    for entry in big_sync.values():
+        assert entry["chunks"] == len(_part_files(entry["path"]))
+        assert entry["seconds"] > 0

@@ -15,10 +15,11 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -41,7 +42,7 @@ def main() -> int:
     # driver would, from a neutral process.
     cmd = [
         sys.executable,
-        "/root/repo/tools/verify_local.py",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "verify_local.py"),
         "--sf",
         args.out,
         "--canon",
